@@ -57,6 +57,16 @@ object Bench {
 
   private val groupSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** A best-effort step: on failure, say on stderr what was swallowed
+    * and carry on with `fallback`. stdout stays the one JSON line. */
+  private def swallow[A](step: String, fallback: => A)(body: => A): A =
+    try body
+    catch { case e: Throwable =>
+      System.err.println(
+        s"[bench] $step swallowed: ${e.getClass.getName}: ${e.getMessage}")
+      fallback
+    }
+
   /** Band-scaled per-entry watchdog ceiling: 30× the committed quiet
     * reading + 15 s slack, the band term capped at 240 s — but the env
     * ceiling stays a hard FLOOR throughout: an operator raising
@@ -124,8 +134,8 @@ object Bench {
         // in processAllAvailable forever. Any active query belongs to
         // the current entry (the bench is sequential and teardown-
         // clean), so stopping them all is the targeted cancel here.
-        try spark.streams.active.foreach(_.stop())
-        catch { case _: Throwable => }
+        swallow(s"$name stream stop", ())(
+          spark.streams.active.foreach(_.stop()))
       }
     }, math.max(1L, (ceilingSec * 1000).toLong))
     val t0 = System.nanoTime()
@@ -162,36 +172,20 @@ object Bench {
     * work and re-creating them per entry would re-time it.
     * Package-visible: ScaleProbe's per-measurement reset is this same
     * contract and must not drift from it. */
-  private[graft] def teardown(spark: SparkSession): Unit = {
-    try {
+  private[graft] def teardown(spark: SparkSession): Unit =
+    swallow("teardown", ()) { // teardown must never fail the bench
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
       val cat = spark.sessionState.catalog
       cat.getTempViewNames().foreach(spark.catalog.dropTempView)
-    } catch { case _: Throwable => } // teardown must never fail the bench
-  }
+    }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val runs = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // per-JVM warehouse — see Verify: no cross-process collisions, no
-      // accumulation of bucketed-table dirs across runs
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_bench_wh").toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.core.Engine.attach(spark)
-
+  /** Untimed warmup, shared by every harness that times catalog entries
+    * (Bench, tools.JobProfile) so first-touch costs don't pollute the
+    * first timed entry. Ends with a [[teardown]]. */
+  private[graft] def warmup(spark: SparkSession, sfDir: String): Unit = {
+    val cpus = spark.sparkContext.defaultParallelism
     // untimed warmup: session, parquet reader, shuffle machinery, codegen;
     // q58's warmup also lays out the bucketed tables so its timed run
     // measures the recurring (exchange-free) join, not the one-time
@@ -216,13 +210,11 @@ object Bench {
         "q58_bucketed_join", "q35_streaming_windows",
         "q290_ann_index_serve", "q291_ann_index_insert",
         "q326_layered_ann_serve", "q345_sharded_layered_serve")) {
-      try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case _: Throwable => }
+      swallow(s"warmup $name", ())(SparkEntry.queries(name)(spark, sfDir).count())
     }
     // the mutating lifecycle entries' immutable seed stores
     // (q322/q329/q335/q344 clone per run): built once per JVM, untimed
-    try Queries.warmSeedStores(spark, sfDir)
-    catch { case _: Throwable => }
+    swallow("warmup seed stores", ())(Queries.warmSeedStores(spark, sfDir))
     // q215 cold-pass attribution (BENCH_r07's largest spread, 9.5 s):
     // the battery's first run costs ~1.7 s over warm (fresh-JVM
     // measurement: 3.6 / 1.9 / 1.7 s). This 256-row touch removes the
@@ -232,12 +224,11 @@ object Bench {
     // untimed work when min-of-2 already records the warm pass and the
     // full-catalog spread measures 0.04 s. The 9.5 s r07 outlier was
     // this cold delta amplified by a busy sandbox window.
-    try spark.range(0, 256, 1, cpus.toInt).selectExpr(
+    swallow("warmup xpath", ())(spark.range(0, 256, 1, cpus).selectExpr(
         "xpath_string(concat('<a><b>', id, '</b></a>'), '/a/b/text()') AS s",
         "xpath_long(concat('<a><b>', id, '</b></a>'), '/a/b/text()') AS l",
         "size(xpath(concat('<a><b>', id, '</b></a>'), '/a/b')) AS n")
-      .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => }
+      .write.format("noop").mode("overwrite").save())
     // q218 cold-pass attribution (BENCH_r08's largest spread, 8.08 s on
     // a ~1 s entry — q215's disease on the OTHER XML path): the first
     // from_xml use pays StAX/Woodstox factory init + StaxXmlParser JIT.
@@ -249,13 +240,26 @@ object Bench {
     // spread to ~0.48 s. The residual is the ENTRY's own plan-specific
     // generated-class compile on first run — unavoidable per distinct
     // plan, and min-of-2 records the warm pass.
-    try spark.range(0, 32768, 1, cpus.toInt).selectExpr(
+    swallow("warmup from_xml", ())(spark.range(0, 32768, 1, cpus).selectExpr(
         "from_xml(concat('<o><k>', CAST(id AS STRING), '</k><p>x</p><ls>', " +
           "repeat('<l>1</l>', CAST(id % 4 AS INT)), '</ls></o>'), " +
           "'k BIGINT, p STRING, ls STRUCT<l: ARRAY<STRING>>') AS o")
-      .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => }
+      .write.format("noop").mode("overwrite").save())
     teardown(spark)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val runs = math.max(1,
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt)
+    // per-JVM warehouse — see Verify: no cross-process collisions, no
+    // accumulation of bucketed-table dirs across runs
+    val spark = graft.core.Engine.session(extraConf = Map(
+      "spark.sql.warehouse.dir" ->
+        java.nio.file.Files.createTempDirectory("graft_bench_wh").toString))
+    spark.sparkContext.setLogLevel("ERROR")
+
+    warmup(spark, sfDir)
 
     // Spread-cluster attribution (BENCH_DETAIL r09: 31 entries with
     // cross-pass spread > 2 s, worst q156 24.9 / q171 18.3 / q117 13.7 /
@@ -290,7 +294,7 @@ object Bench {
     // timed body and re-runs cleanly on pass 2.
     val ctasEntry: Seq[(String, () => Unit)] =
       if (only.exists(!_.exists("m33_ctas_2800000_rows".startsWith(_)))) Seq.empty
-      else try {
+      else swallow("m33 ctas setup", Seq.empty[(String, () => Unit)]) {
         val base = new java.io.File(
           System.getProperty("java.io.tmpdir"), "graft_bench_m33full").getAbsolutePath
         val root = graft.sources.M33Fixture
@@ -299,7 +303,7 @@ object Bench {
           graft.pipeline.M33Pipeline.rawTable(spark, root))
         Seq("m33_ctas_2800000_rows" ->
           (() => { graft.pipeline.M33Pipeline.ctasCsv(view, s"$base/wh"); () }))
-      } catch { case _: Throwable => Seq.empty }
+      }
 
     // BASELINE.md's second headline: Sqoop exports the warehouse table's
     // 2.8M rows into the RDBMS with 4 parallel batched-INSERT mappers at
@@ -313,7 +317,7 @@ object Bench {
     // `=m33x` to isolate one.
     val exportEntry: Seq[(String, () => Unit)] =
       if (only.exists(!_.exists("m33x_export_2800000_rows".startsWith(_)))) Seq.empty
-      else try {
+      else swallow("m33x export setup", Seq.empty[(String, () => Unit)]) {
         val base = new java.io.File(
           System.getProperty("java.io.tmpdir"), "graft_bench_m33full").getAbsolutePath
         val root = graft.sources.M33Fixture
@@ -332,21 +336,21 @@ object Bench {
         // it was the only cross-pass spread above 2 s in the committed
         // artifact (the timed passes should measure the export, not
         // Derby's first-open recovery/boot cost)
-        try graft.sinks.JdbcSink.execStatements(url, Seq(
+        swallow("m33x derby warmup", ())(graft.sinks.JdbcSink.execStatements(url, Seq(
           "CREATE TABLE m33x_warmup (x INT)",
           "INSERT INTO m33x_warmup VALUES (1)",
-          "DROP TABLE m33x_warmup"))
-        catch { case _: Throwable => () }
+          "DROP TABLE m33x_warmup")))
         Seq("m33x_export_2800000_rows" -> (() => {
-          try graft.sinks.JdbcSink.execStatements(url, Seq("DROP TABLE m33x"))
-          catch { case _: Throwable => () } // first pass: no table to drop
+          // first pass: no table to drop
+          swallow("m33x drop", ())(
+            graft.sinks.JdbcSink.execStatements(url, Seq("DROP TABLE m33x")))
           graft.sinks.JdbcSink.execStatements(url, Seq(
             "CREATE TABLE m33x (age_mil BIGINT, wavelength DOUBLE, flam DOUBLE, is_peculiar INT)"))
           graft.sinks.JdbcSink.export(
             graft.pipeline.M33Pipeline.readM33Csv(spark, csv), url, "m33x",
             numMappers = 4, batchSize = 10000)
         }))
-      } catch { case _: Throwable => Seq.empty }
+      }
 
     val entries: Seq[(String, () => Unit)] = selected.map { case (name, q) =>
       name -> (() => q.benchFn.getOrElse(q.fn)(spark, sfDir)
@@ -384,13 +388,14 @@ object Bench {
     // and a backstop that fires on ambient load is misreporting, not
     // protection. Entries without a committed reading keep the env
     // ceiling; the baseline-scale entries keep their 160 s floor.
-    val committedT: Map[String, Double] = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"${repoRoot()}/BENCH_DETAIL.json")),
-        java.nio.charset.StandardCharsets.UTF_8)
-      "\"([^\"]+)\":\\{\"t\":(-?[0-9.Ee+-]+)".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case _: Throwable => Map.empty }
+    val committedT: Map[String, Double] =
+      swallow("committed readings", Map.empty[String, Double]) {
+        val txt = new String(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(s"${repoRoot()}/BENCH_DETAIL.json")),
+          java.nio.charset.StandardCharsets.UTF_8)
+        "\"([^\"]+)\":\\{\"t\":(-?[0-9.Ee+-]+)".r.findAllMatchIn(txt)
+          .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      }
     def ceilingFor(name: String): Double =
       bandCeiling(name, committedT, ceiling, baselineScaleEntries)
     def onePass(): Seq[Double] = entries.map { case (name, run) =>
@@ -478,10 +483,10 @@ object Bench {
       else s"${repoRoot()}/BENCH_DETAIL.json"
     val detailPath = sys.env.getOrElse(
       "SPARK_GRAFT_BENCH_DETAIL", defaultDetail)
-    try java.nio.file.Files.write(
+    // read-only fs etc.: the stdout line still carries the data
+    swallow("detail write", ())(java.nio.file.Files.write(
       java.nio.file.Paths.get(detailPath),
-      detailJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => } // read-only fs etc.: the stdout line still carries the data
+      detailJson.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
 
     // The harness that records this run keeps only the last 2,000 chars of
     // stdout, and sbt appends a ~75-char "[success] ..." footer after us —
@@ -532,9 +537,8 @@ object Bench {
       }
     val droppedJson = if (dropped > 0) s""","dropped":$dropped""" else ""
     // numeric sf when the dir encodes one ("…/sf0.1"); else the full path
-    val sfJson =
-      try sfDir.replaceAll(".*sf", "").toDouble.toString
-      catch { case _: Throwable => "\"" + sfDir + "\"" }
+    val sfJson = swallow("numeric sf", "\"" + sfDir + "\"")(
+      sfDir.replaceAll(".*sf", "").toDouble.toString)
     println(s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","runs":$actualRuns,"queries":$qs$droppedJson,"sf":$sfJson}""")
     spark.stop()
   }

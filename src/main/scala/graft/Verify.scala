@@ -1,8 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json for the DuckDB oracle compare
+  * (tools/check_oracle.py), and verify_status.json: one
+  * {status, elapsed_s, error} per selected entry, so a failed entry is
+  * named in an artifact, not only on stderr. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated name prefixes — run only matching
@@ -12,22 +14,12 @@ object Verify {
       case Array(s, o, f) => (s, o, Some(f.split(',').toSeq))
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // per-JVM warehouse: managed tables (q58's bucketed layout) never
-      // collide with a concurrently-running Bench, and nothing
-      // accumulates across runs — the dir dies with the tmp cleanup
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_verify_wh").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the catalog relies on Hive-style NULL-on-malformed casts
-      // (Spark 4 defaults ANSI on) — must match Engine.session/Bench
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // per-JVM warehouse: managed tables (q58's bucketed layout) never
+    // collide with a concurrently-running Bench, and nothing
+    // accumulates across runs — the dir dies with the tmp cleanup
+    val spark = graft.core.Engine.session(s"local[$cpus]",
+      shufflePartitions = cpus.toInt, extraConf = Map("spark.sql.warehouse.dir" ->
+        Files.createTempDirectory("graft_verify_wh").toString))
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -64,16 +56,28 @@ object Verify {
     }
     val tasks = selected.map { case (name, fn) =>
       scala.concurrent.Future {
-        try fn(spark.newSession(), sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+        val t0 = System.nanoTime()
+        val error =
+          try {
+            fn(spark.newSession(), sfDir).coalesce(1).write.mode("overwrite")
+              .parquet(s"$outDir/$name")
+            None
+          } catch { case e: Throwable =>
+            System.err.println(s"[verify] $name failed: ${e.getMessage}")
+            Some(s"${e.getClass.getName}: ${e.getMessage}")
+          }
+        val elapsed = "%.3f".formatLocal(java.util.Locale.ROOT,
+          (System.nanoTime() - t0) / 1e9)
+        val status = if (error.isEmpty) "ok" else "failed"
+        val err = error.map(q).getOrElse("null")
+        s"""${q(name)}: {"status": ${q(status)}, "elapsed_s": $elapsed, "error": $err}"""
       }
     }
-    scala.concurrent.Await.result(
+    val statuses = scala.concurrent.Await.result(
       scala.concurrent.Future.sequence(tasks),
       scala.concurrent.duration.Duration.Inf)
+    Files.writeString(Paths.get(s"$outDir/verify_status.json"),
+      statuses.mkString("{", ",", "}"))
     pool.shutdown()
     spark.stop()
   }

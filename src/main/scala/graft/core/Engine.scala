@@ -19,6 +19,9 @@ object Engine {
   /** Default parallelism for local test runs. */
   def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
+  /** The one SparkSession builder in the engine: Bench, Verify, the dev
+    * tools, the CLI and [[hiveSession]] all come through here, so the
+    * pins below are what gets benchmarked, verified and tested. */
   def session(
       master: String = s"local[$defaultCpus]",
       appName: String = "graft",
@@ -63,25 +66,15 @@ object Engine {
       warehouseDir: String,
       metastoreDir: String,
       master: String = s"local[$defaultCpus]"): SparkSession = {
-    val b = SparkSession
-      .builder()
-      .master(master)
-      .appName("graft-hive")
-      .enableHiveSupport()
-      .config("spark.sql.warehouse.dir", warehouseDir)
-      .config(
-        "javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=$metastoreDir/metastore_db;create=true")
-      .config("spark.hadoop.hive.metastore.schema.verification", "false")
-      .config("spark.hadoop.datanucleus.schema.autoCreateAll", "true")
-      .config("spark.sql.shuffle.partitions", defaultCpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Functions.registerAll(spark)
+    val spark = session(master, "graft-hive", defaultCpus.toInt, Map(
+      // exactly what Builder.enableHiveSupport() sets (the builder checks
+      // the Hive classes are present when it sees this key)
+      "spark.sql.catalogImplementation" -> "hive",
+      "spark.sql.warehouse.dir" -> warehouseDir,
+      "javax.jdo.option.ConnectionURL" ->
+        s"jdbc:derby:;databaseName=$metastoreDir/metastore_db;create=true",
+      "spark.hadoop.hive.metastore.schema.verification" -> "false",
+      "spark.hadoop.datanucleus.schema.autoCreateAll" -> "true"))
     installHeaderSkipRule(spark)
     spark
   }

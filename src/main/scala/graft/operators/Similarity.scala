@@ -1339,6 +1339,15 @@ object Similarity {
       col("id").as("q_id"), col("nbr").as("n_id"), col("d2"), col("rank"))
   }
 
+  /** The beam searches' closure-checkpoint cliff: an input whose logical
+    * plan has at most 8 nodes (a checkpointed snapshot or a parquet read,
+    * modulo a few projections) is cheap to re-analyze every round, so its
+    * closure skips the blocking `localCheckpoint` job; a composed input
+    * is checkpointed to bound plan growth. */
+  private def closureInputIsLeafLike(input: DataFrame): Boolean =
+    org.apache.spark.sql.graftbridge.Bridge
+      .logicalPlan(input).collect { case p => p }.size <= 8
+
   /** Deterministic beam search over a k-NN graph — the QUERY path of
     * graph-based ANN (the greedy search HNSW/NSG run, flattened to
     * fixed synchronous rounds so it is relationally unrollable): start
@@ -1415,9 +1424,7 @@ object Similarity {
         .select(col("q_id").as("node"), col("n_id").as("nbr"))
         .unionByName(graph.select(col("n_id").as("node"), col("q_id").as("nbr")))
         .repartition(col("node")).distinct()
-      val inputNodes = org.apache.spark.sql.graftbridge.Bridge
-        .logicalPlan(graph).collect { case p => p }.size
-      if (inputNodes <= 8) closure else closure.localCheckpoint()
+      if (closureInputIsLeafLike(graph)) closure else closure.localCheckpoint()
     }
     def score(cand: DataFrame): DataFrame =
       cand.join(v, "n_id").join(broadcast(q), "q_id")
@@ -1555,9 +1562,7 @@ object Similarity {
         .unionByName(index.select(col("cell").cast("long").as("cell"),
           col("n_id").as("node"), col("q_id").as("nbr")))
         .distinct()
-      val inputNodes = org.apache.spark.sql.graftbridge.Bridge
-        .logicalPlan(index).collect { case p => p }.size
-      if (inputNodes <= 8) closure else closure.localCheckpoint()
+      if (closureInputIsLeafLike(index)) closure else closure.localCheckpoint()
     }
     def score(cand: DataFrame): DataFrame =
       cand.join(v, "n_id").join(broadcast(q), Seq("q_id", "cell"))

@@ -1,35 +1,25 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `explain("formatted")` for selected catalog entries to files —
   * the optimization rounds' plan evidence (plans/rNN/<entry>_{before,
   * after}.txt). Args: <outDir> <suffix> <comma-separated prefixes>.
-  * Uses the Bench session shape so the captured plans are the benched
-  * ones. For multi-phase entries (CDC drains, store mutations) the
-  * dumped plan is the entry's RETURNED DataFrame — the readout — which
-  * is the only plan `explain` can see; changes inside foreachBatch
-  * bodies are evidenced by the per-batch operator plans of the helpers
-  * they call, not by this dump. */
+  * Runs on `Engine.session` with Bench's settings (per-JVM warehouse,
+  * SPARK_GRAFT_CPUS) so the captured plans are the benched ones. For
+  * multi-phase entries (CDC drains, store mutations) the dumped plan is
+  * the entry's RETURNED DataFrame — the readout — which is the only plan
+  * `explain` can see; changes inside foreachBatch bodies are evidenced
+  * by the per-batch operator plans of the helpers they call, not by
+  * this dump. */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
     val only = args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_expl_wh").toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Engine.session(extraConf = Map(
+      "spark.sql.warehouse.dir" ->
+        java.nio.file.Files.createTempDirectory("graft_expl_wh").toString))
     spark.sparkContext.setLogLevel("ERROR")
-    graft.core.Engine.attach(spark)
     new java.io.File(outDir).mkdirs()
     for ((name, q) <- graft.Queries.all
         if only.exists(name.startsWith)) {

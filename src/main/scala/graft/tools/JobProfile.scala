@@ -1,36 +1,26 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement harness for the optimization rounds (guide §1): runs
-  * selected catalog entries under the Bench session shape and attributes
-  * each entry's wall time to Spark jobs vs driver-side gaps — the
-  * decisive split for the tiny-fixture lifecycle entries, where the
-  * question is "compute-bound or overhead-bound?". Prints, per entry:
-  * wall seconds, job count, summed job wall, summed task time, and the
-  * driver gap (wall − job wall ≈ planning/collect/file-IO on the
-  * driver). Usage:
+  * selected catalog entries on `Engine.session` with Bench's settings,
+  * after `Bench.warmup`, and attributes each entry's wall time to Spark
+  * jobs vs driver-side gaps — the decisive split for the tiny-fixture
+  * lifecycle entries, where the question is "compute-bound or
+  * overhead-bound?". Prints, per entry: wall seconds, job count, summed
+  * job wall, summed task time, and the driver gap (wall − job wall ≈
+  * planning/collect/file-IO on the driver). Usage:
   *   SPARK_GRAFT_PROFILE_ONLY=q344,q349 sbt "runMain graft.tools.JobProfile"
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = sys.env.getOrElse("SPARK_GRAFT_PROFILE_ONLY", "q344")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_prof_wh").toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Engine.session(extraConf = Map(
+      "spark.sql.warehouse.dir" ->
+        java.nio.file.Files.createTempDirectory("graft_prof_wh").toString))
     spark.sparkContext.setLogLevel("ERROR")
-    graft.core.Engine.attach(spark)
 
     @volatile var jobs = 0
     @volatile var stages = 0
@@ -55,17 +45,7 @@ object JobProfile {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    // warmup identical to Bench's so first-touch costs don't pollute
-    for (name <- Seq(
-        "q01_pricing_summary", "q15_doc_parse", "q27_ann_brute_topk",
-        "q58_bucketed_join", "q35_streaming_windows",
-        "q290_ann_index_serve", "q291_ann_index_insert",
-        "q326_layered_ann_serve", "q345_sharded_layered_serve")) {
-      try graft.SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case _: Throwable => }
-    }
-    try graft.Queries.warmSeedStores(spark, sfDir)
-    catch { case _: Throwable => }
+    graft.Bench.warmup(spark, sfDir)
 
     val selected = graft.Queries.all.filter { case (n, _) =>
       only.exists(n.startsWith)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot plan audit over the whole catalog: prints, per query, the
   * operators that matter for 100 TB behavior (joins, exchanges, scans
   * with/without pushdown, codegen coverage, cartesians). Red flags are
@@ -11,15 +9,8 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Engine.session("local[8]", shufflePartitions = 8)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.core.Engine.attach(spark)
     graft.Queries.all.foreach { case (name, q) =>
       try {
         val p = q.fn(spark, sfDir).queryExecution.executedPlan.toString

@@ -438,19 +438,11 @@ object ScaleProbe {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_BASE", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_sf1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_scale_wh").toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = graft.core.Engine.defaultCpus
+    val spark = graft.core.Engine.session(extraConf = Map(
+      "spark.sql.warehouse.dir" ->
+        java.nio.file.Files.createTempDirectory("graft_scale_wh").toString))
     spark.sparkContext.setLogLevel("ERROR")
-    graft.core.Engine.attach(spark)
 
     val marker = new java.io.File(outDir, s"_GENERATED_x$factor")
     if (!marker.exists()) {

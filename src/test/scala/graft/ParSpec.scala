@@ -39,6 +39,30 @@ class ParSpec extends AnyFunSuite {
     assert(ids == Seq(caller))
   }
 
+  test("Par.run past its ceiling cancels its own hung job instead of leaving it running") {
+    val sc = TestSpark.spark.sparkContext
+    // one thunk never finishes: its single task sleeps for an hour
+    val hung: () => Unit = () =>
+      sc.parallelize(Seq(1), 1).foreach(_ => Thread.sleep(3600L * 1000))
+    intercept[java.util.concurrent.TimeoutException] {
+      graft.core.Par.run[Unit](Seq(hung, () => ()), 2, ceilingSec = 2L)
+    }
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getActiveJobIds().nonEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(100)
+    assert(sc.statusTracker.getActiveJobIds().isEmpty,
+      "the timed-out group's job is still running")
+  }
+
+  test("SPARK_GRAFT_PAR_TIMEOUT_SEC: default 3600, malformed values name the variable") {
+    assert(graft.core.Par.timeoutSec(None) == 3600L)
+    assert(graft.core.Par.timeoutSec(Some(" 90 ")) == 90L)
+    for (bad <- Seq("abc", "1.5", "0", "-3")) {
+      val e = intercept[IllegalArgumentException](graft.core.Par.timeoutSec(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_PAR_TIMEOUT_SEC"), e.getMessage)
+    }
+  }
+
   test("VP8L canonical PrefixCode decode ≡ the (len,code)→symbol map walk") {
     // the pre-round-17 reference decoder, verbatim: per-bit map lookup
     def mapDecode(lens: Array[Int], bits: Seq[Int]): (Int, Int) = {
