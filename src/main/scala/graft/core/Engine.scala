@@ -1,6 +1,10 @@
 package graft.core
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import graft.functions.Functions
 
 /** SparkSession factory and table access for the graft engine.
@@ -45,6 +49,17 @@ object Engine {
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.parquet.compression.codec", "snappy")
+      // static, JVM-wide: Spark's default of 100 generated classes is
+      // smaller than one pass over the short SQL entries (~290 classes),
+      // and LRU over a cyclic working set larger than the cache never
+      // hits, so every entry recompiled every class on every run
+      .config("spark.sql.codegen.cache.maxEntries", "500")
+      // the UI is off and nothing reads completed jobs, stages or SQL
+      // executions back; at the defaults (1000 each) the status store
+      // keeps ~6 MB per 20 completed operations
+      .config("spark.ui.retainedJobs", "50")
+      .config("spark.ui.retainedStages", "50")
+      .config("spark.sql.ui.retainedExecutions", "50")
     extraConf.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -90,7 +105,49 @@ object Engine {
     }
   }
 
-  /** Read one of the harness parquet tables (TESTDATA.md).
+  /** Session confs that change the schema Spark infers from a parquet
+    * footer; part of [[parquetSchema]]'s cache key. */
+  private val schemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive")
+
+  /** Inferred schemas of single parquet files, by (qualified path, the
+    * [[schemaConfs]] values); the value carries the file's length and
+    * mtime so a rewritten file replaces its own entry. */
+  private val footerSchemas =
+    new ConcurrentHashMap[(String, Seq[String]), (Long, Long, StructType)]()
+
+  /** The schema `spark.read.parquet(path)` would infer. Inference runs a
+    * Spark job on every read; for a regular file the result is cached
+    * per file version (length, mtime) and schema-relevant confs, so
+    * repeated reads of one table plan without a job. A directory (a
+    * store that queries append to) is inferred on every call. */
+  def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a missing path falls through to the reader's own error
+    val file = try Some(fs.getFileStatus(p)).filter(_.isFile)
+      catch { case _: java.io.FileNotFoundException => None }
+    file match {
+      case None => spark.read.parquet(path).schema
+      case Some(st) =>
+        val key = (fs.makeQualified(p).toString,
+          schemaConfs.map(k => spark.conf.getOption(k).getOrElse("")))
+        val hit = footerSchemas.get(key)
+        if (hit != null && hit._1 == st.getLen && hit._2 == st.getModificationTime) hit._3
+        else {
+          val schema = spark.read.parquet(path).schema
+          footerSchemas.put(key, (st.getLen, st.getModificationTime, schema))
+          schema
+        }
+    }
+  }
+
+  /** Read one of the harness parquet tables (TESTDATA.md), planning with
+    * the [[parquetSchema]] cache.
     *
     * `events.parquet` has shipped `ts` in two physical layouts across
     * harness generations, and the reader must present ONE logical type
@@ -106,20 +163,17 @@ object Engine {
     * a mixed checkout (old sf0.01, new sf0.1) still reads correctly. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(path)
-      raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
-            org.apache.spark.sql.functions.expr("ts div 1000")))
-        case _: org.apache.spark.sql.types.TimestampNTZType =>
-          raw.withColumn("ts",
-            org.apache.spark.sql.functions.col("ts").cast("timestamp"))
-        case _ => raw
-      }
-    } else {
-      spark.read.parquet(path)
+    if (name == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val raw = spark.read.schema(parquetSchema(spark, path)).parquet(path)
+    if (name != "events") raw
+    else raw.schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType =>
+        raw.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
+          org.apache.spark.sql.functions.expr("ts div 1000")))
+      case _: org.apache.spark.sql.types.TimestampNTZType =>
+        raw.withColumn("ts",
+          org.apache.spark.sql.functions.col("ts").cast("timestamp"))
+      case _ => raw
     }
   }
 }

@@ -43,16 +43,24 @@ object EventStreams {
     "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, " +
       "value DOUBLE, props STRING"
 
+  /** Source directories handed out by [[sourceDir]], one per file. */
+  private val sourceDirs = new java.util.concurrent.ConcurrentHashMap[java.nio.file.Path, String]()
+
   /** File-stream sources require a directory; expose a single file (the
     * harness tables are one parquet file each) through a symlinked temp
-    * directory. */
+    * directory, made once per file per JVM (every query keeps its own
+    * checkpoint, so they can share it). */
   private[graft] def sourceDir(path: String): String = {
-    val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.isRegularFile(p)) {
-      val d = java.nio.file.Files.createTempDirectory("graft_stream_src")
-      java.nio.file.Files.createSymbolicLink(d.resolve(p.getFileName), p)
-      d.toString
-    } else path
+    val p = java.nio.file.Paths.get(path).toAbsolutePath.normalize
+    if (java.nio.file.Files.isRegularFile(p))
+      sourceDirs.computeIfAbsent(p, { file =>
+        val d = java.nio.file.Files.createTempDirectory("graft_stream_src")
+        java.nio.file.Files.createSymbolicLink(d.resolve(file.getFileName), file)
+        d.toFile.deleteOnExit()
+        d.resolve(file.getFileName).toFile.deleteOnExit()
+        d.toString
+      })
+    else path
   }
 
   def readStream(spark: SparkSession, path: String): DataFrame = {
@@ -60,11 +68,11 @@ object EventStreams {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // a file stream needs a user-supplied schema, and `ts` has shipped
     // in two physical layouts across harness generations (see
-    // Engine.table) — sniff the footer via a one-off batch schema
-    // inference and present the SAME logical type (session-TZ
+    // Engine.table) — sniff the footer (Engine's cached schema
+    // inference) and present the SAME logical type (session-TZ
     // TIMESTAMP, us precision) for both
-    val nanosLayout = spark.read.parquet(path)
-      .schema("ts").dataType == org.apache.spark.sql.types.LongType
+    val nanosLayout = graft.core.Engine.parquetSchema(spark, path)
+      .apply("ts").dataType == org.apache.spark.sql.types.LongType
     if (nanosLayout)
       spark.readStream
         .schema(rawSchemaDDL)

@@ -328,4 +328,14 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.length == 1)
     assert(streamed(0).user_id == 7 && streamed(0).n_events == 2)
   }
+
+  test("sourceDir: one symlinked source directory per file, a directory passes through") {
+    val dir = EventStreams.sourceDir(s"$sf/events.parquet")
+    assert(EventStreams.sourceDir(s"$sf/events.parquet") == dir)
+    assert(EventStreams.sourceDir(s"$sf/./events.parquet") == dir)
+    val listed = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+    try assert(listed.iterator().asScala.map(_.getFileName.toString).toList == List("events.parquet"))
+    finally listed.close()
+    assert(EventStreams.sourceDir(sf) == sf)
+  }
 }
