@@ -60,6 +60,13 @@ object Engine {
       .config("spark.ui.retainedJobs", "50")
       .config("spark.ui.retainedStages", "50")
       .config("spark.sql.ui.retainedExecutions", "50")
+      // the generated-code cache is keyed on (context classloader, code),
+      // and with artifact isolation on (the default) each session runs
+      // its tasks under its own ExecutorClassLoader, so identical code
+      // compiled once per newSession() and once per streaming query (its
+      // StreamExecution clones the session); read only when a session is
+      // created, so it is pinned here, and the engine adds no artifacts
+      .config("spark.sql.artifact.isolation.enabled", "false")
     extraConf.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -68,7 +75,11 @@ object Engine {
   }
 
   /** Configure an externally built session (e.g. the driver's) with graft
-    * function registrations. Idempotent. */
+    * function registrations. Idempotent: a repeated call registers
+    * nothing. The session keeps its builder's confs; in particular,
+    * with artifact isolation on (Spark's default), each of its
+    * `newSession()`s and streaming queries still compiles its own
+    * generated classes (see [[session]]). */
   def attach(spark: SparkSession): SparkSession = {
     Functions.registerAll(spark)
     spark

@@ -12,53 +12,56 @@ import org.apache.spark.sql.functions._
   */
 object Functions {
 
+  import org.apache.spark.sql.catalyst.expressions.Expression
+  import org.apache.spark.sql.graftbridge.Bridge
   import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
 
-  /** Register SQL-callable names for the custom Catalyst expressions. */
-  def registerAll(spark: SparkSession): Unit = {
-    org.apache.spark.sql.graftbridge.Bridge
-      .registerFunction(spark, "field", exprs => FieldIndex(exprs))
-    org.apache.spark.sql.graftbridge.Bridge
-      .registerFunction(spark, "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)))
-    org.apache.spark.sql.graftbridge.Bridge
-      .registerFunction(spark, "dot_product", exprs => DotProduct(exprs(0), exprs(1)))
-    org.apache.spark.sql.graftbridge.Bridge
-      .registerFunction(spark, "md5_hash64", exprs => Md5Hash64(exprs.head))
-    org.apache.spark.sql.graftbridge.Bridge
-      .registerFunction(spark, "md5_hash64_full", exprs => Md5Hash64Full(exprs.head))
-    org.apache.spark.sql.graftbridge.Bridge
-      .registerFunction(spark, "word_shingles", { exprs =>
-        require(exprs(1).foldable, "word_shingles(text, n): n must be a literal")
-        WordShingles(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue())
-      })
-    org.apache.spark.sql.graftbridge.Bridge
-      .registerFunction(spark, "misra_gries", { exprs =>
-        require(exprs(1).foldable, "misra_gries(col, k): k must be a literal")
-        MisraGries(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue())
-          .toAggregateExpression()
-      })
-    org.apache.spark.sql.graftbridge.Bridge
-      .registerFunction(spark, "kll_sketch", { exprs =>
-        require(exprs(2).foldable, "kll_sketch(col, weight, k): k must be a literal")
-        KllSketch(exprs(0), exprs(1),
-          exprs(2).eval().asInstanceOf[Number].intValue())
-          .toAggregateExpression()
-      })
+  /** The SQL-callable names of the custom Catalyst expressions. */
+  private val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "field" -> (exprs => FieldIndex(exprs)),
+    "cosine_sim" -> (exprs => CosineSim(exprs(0), exprs(1))),
+    "dot_product" -> (exprs => DotProduct(exprs(0), exprs(1))),
+    "md5_hash64" -> (exprs => Md5Hash64(exprs.head)),
+    "md5_hash64_full" -> (exprs => Md5Hash64Full(exprs.head)),
+    "word_shingles" -> { exprs =>
+      require(exprs(1).foldable, "word_shingles(text, n): n must be a literal")
+      WordShingles(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue())
+    },
+    "misra_gries" -> { exprs =>
+      require(exprs(1).foldable, "misra_gries(col, k): k must be a literal")
+      MisraGries(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue())
+        .toAggregateExpression()
+    },
+    "kll_sketch" -> { exprs =>
+      require(exprs(2).foldable, "kll_sketch(col, weight, k): k must be a literal")
+      KllSketch(exprs(0), exprs(1),
+        exprs(2).eval().asInstanceOf[Number].intValue())
+        .toAggregateExpression()
+    },
     // Spark's runtime-filter bloom expressions, surfaced as SQL
     // functions: the engine only injects them via InjectRuntimeFilter;
     // registering them lets a pipeline build the semi-join pre-filter
     // EXPLICITLY (build a bloom over the dim keys, drop non-candidate
     // fact rows before the shuffle, verify exactly after).
-    org.apache.spark.sql.graftbridge.Bridge
-      .registerFunction(spark, "bloom_agg", { exprs =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-          .toAggregateExpression()
-      })
-    org.apache.spark.sql.graftbridge.Bridge
-      .registerFunction(spark, "bloom_might_contain", exprs =>
-        new org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain(exprs(0), exprs(1)))
+    "bloom_agg" -> { exprs =>
+      new org.apache.spark.sql.catalyst.expressions.aggregate
+        .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
+        .toAggregateExpression()
+    },
+    "bloom_might_contain" -> (exprs =>
+      new org.apache.spark.sql.catalyst.expressions
+        .BloomFilterMightContain(exprs(0), exprs(1))))
+
+  /** Once per JVM: sessions created afterwards clone the builtin registry. */
+  private lazy val builtinsRegistered: Unit =
+    sqlFunctions.foreach { case (name, b) => Bridge.registerBuiltinFunction(name, b) }
+
+  /** Register the SQL-callable names: in the builtin registry once per
+    * JVM, and in `spark`'s own registry where a name is absent, so a
+    * repeated call on one session registers nothing. */
+  def registerAll(spark: SparkSession): Unit = {
+    builtinsRegistered
+    sqlFunctions.foreach { case (name, b) => Bridge.registerSessionFunctionIfAbsent(spark, name, b) }
   }
 
   /** Misra–Gries heavy-hitters sketch aggregate (see [[MisraGries]]). */

@@ -97,25 +97,35 @@ object Bridge {
     }
   }
 
-  /** Register a Catalyst expression builder as a SQL-callable function.
-    *
-    * Registered both in the session registry (visible immediately) and in
-    * the static builtin registry (so sessions created later inherit it,
-    * and permanent views may reference it — `SessionCatalog
-    * .isTemporaryFunction` excludes builtins). */
-  def registerFunction(
-      spark: SparkSession,
+  /** Register a Catalyst expression builder as a SQL-callable function
+    * in the static builtin registry, so sessions created later inherit
+    * it and permanent views may reference it (`SessionCatalog
+    * .isTemporaryFunction` excludes builtins). Replaces any earlier
+    * registration of `name`. */
+  def registerBuiltinFunction(
       name: String,
       builder: Seq[Expression] => Expression): Unit = {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
     import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    val info = new ExpressionInfo("graft.functions", name)
-    FunctionRegistry.builtin.registerFunction(FunctionIdentifier(name), info, builder)
-    spark
-      .asInstanceOf[classic.SparkSession]
-      .sessionState
-      .functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
+    FunctionRegistry.builtin.registerFunction(
+      FunctionIdentifier(name), new ExpressionInfo("graft.functions", name), builder)
+  }
+
+  /** Register `builder` as `name` in the session's own registry (visible
+    * immediately) unless the name is already there, e.g. cloned from the
+    * builtin registry when the session was created. */
+  def registerSessionFunctionIfAbsent(
+      spark: SparkSession,
+      name: String,
+      builder: Seq[Expression] => Expression): Unit = {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+    val registry = spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
+    val id = FunctionIdentifier(name)
+    registry.synchronized {
+      if (!registry.functionExists(id))
+        registry.registerFunction(id, new ExpressionInfo("graft.functions", name), builder)
+    }
   }
 }

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,7 +17,8 @@ import graft.core.Engine
   * configuration that is benchmarked and verified). Also the per-query
   * fixed-cost locks: harness-table reads plan without a footer-inference
   * job once a file's schema is cached, and a pass over the short SQL
-  * entries fits in the generated-code cache. */
+  * entries fits in the generated-code cache, also when the repeat runs
+  * on another session. */
 class EngineSpec extends AnyFunSuite {
 
   private val pins = Seq(
@@ -27,7 +27,8 @@ class EngineSpec extends AnyFunSuite {
     "spark.sql.codegen.cache.maxEntries" -> "500",
     "spark.ui.retainedJobs" -> "50",
     "spark.ui.retainedStages" -> "50",
-    "spark.sql.ui.retainedExecutions" -> "50")
+    "spark.sql.ui.retainedExecutions" -> "50",
+    "spark.sql.artifact.isolation.enabled" -> "false")
 
   /** The catalog's sf0.01 tables, as committed for the benchmark. */
   private val sf = "perfbench/data/sf0.01"
@@ -118,17 +119,30 @@ class EngineSpec extends AnyFunSuite {
 
   test("codegen cache holds a pass over q01-q14: a second pass compiles almost nothing") {
     val spark = TestSpark.spark
-    val entries = Queries.all.filter { case (n, _) => n.matches("q(0[1-9]|1[0-4])_.*") }
-    assert(entries.size == 14)
-    def pass(): Long = {
-      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      entries.foreach { case (_, q) => q.fn(spark, sf).write.format("noop").mode("overwrite").save() }
-      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-    }
-    val first = pass()
-    val second = pass()
+    val first = CodegenReuse.compiles(CodegenReuse.shortEntries(spark, sf))
+    val second = CodegenReuse.compiles(CodegenReuse.shortEntries(spark, sf))
     assert(second <= first / 10,
       s"second pass compiled $second classes, first pass $first: the working set does not fit")
+  }
+
+  test("codegen cache is shared across sessions: q01-q14 on a second newSession compiles almost nothing") {
+    val (first, second) = CodegenReuse.inChildJvm("sessions", sf)
+    assert(second <= first / 10,
+      s"second session compiled $second classes, first session $first: sessions do not share generated code")
+  }
+
+  test("Engine.attach is idempotent: a second call keeps the registered functions") {
+    val spark = TestSpark.spark.newSession()
+    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    val field = org.apache.spark.sql.catalyst.FunctionIdentifier("field")
+    Engine.attach(spark)
+    val info = registry.lookupFunction(field)
+    assert(info.isDefined)
+    Engine.attach(spark)
+    assert(registry.lookupFunction(field).exists(_ eq info.get),
+      "a second attach replaced the registered `field`")
+    assert(spark.sql("SELECT field('b', 'a', 'b')").head().getInt(0) == 2)
   }
 
   test("lint: harness-table parquet reads go through Engine (cached footer schema)") {

@@ -329,6 +329,14 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed(0).user_id == 7 && streamed(0).n_events == 2)
   }
 
+  test("a rerun of one stream on one session compiles no new generated classes") {
+    // each run clones the session; the clone must run its tasks under
+    // the same classloader, on which the generated-code cache is keyed
+    val (first, second) = CodegenReuse.inChildJvm("stream", sf)
+    assert(first > 0)
+    assert(second == 0, s"the second run compiled $second generated classes (the first $first)")
+  }
+
   test("sourceDir: one symlinked source directory per file, a directory passes through") {
     val dir = EventStreams.sourceDir(s"$sf/events.parquet")
     assert(EventStreams.sourceDir(s"$sf/events.parquet") == dir)
