@@ -130,8 +130,8 @@ object Bench {
           s"bench entry ceiling ${ceilingSec}s exceeded")
         // a streaming entry's micro-batch jobs run in the stream
         // execution thread's OWN job group (runId), not this entry's —
-        // cancelling the group above would leave drainToTable blocked
-        // in processAllAvailable forever. Any active query belongs to
+        // cancelling the group above would leave EventStreams.drain
+        // blocked forever. Any active query belongs to
         // the current entry (the bench is sequential and teardown-
         // clean), so stopping them all is the targeted cancel here.
         swallow(s"$name stream stop", ())(

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Engine
 import graft.functions.{Functions => F}
 import graft.operators.{AsOfJoin, Dedup, Sampling, Similarity, TextAnalysis}
+import graft.streaming.EventStreams
 
 /** The query catalog: every operator from SURVEY §2 (and the north-star
   * extensions) as a named (Spark impl, DuckDB oracle SQL) pair.
@@ -136,11 +137,7 @@ object Queries {
     * instead of leaving an orphan dir each. */
   private def freshScratchDir(name: String): String = {
     val p = java.nio.file.Paths.get(scratchDir(name))
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala
-        .toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    EventStreams.deleteTree(p)
     p.toString
   }
 
@@ -2826,7 +2823,7 @@ object Queries {
         val q = graft.streaming.DocStreams.startCountMin(
           graft.streaming.DocStreams.readStream(s, dir.toString),
           s"$base/store", s"$base/ckpt")
-        try q.processAllAvailable() finally q.stop()
+        EventStreams.drain(q)
         val sketch = s.read.parquet(s"$base/store/current")
         val docs = t(s, d, "documents")
         val top = TextAnalysis.vocabulary(docs, "doc_id", "text", 30)
@@ -3885,7 +3882,7 @@ object Queries {
         val stream = s.readStream.schema(ev.schema).parquet(s"$base/src")
         val q = graft.streaming.UpsertSink.start(stream, s"$base/state",
           s"$base/ckpt", "user_id", "ts", "event_id", Seq("value"))
-        try q.processAllAvailable() finally q.stop()
+        EventStreams.drain(q)
         graft.streaming.UpsertSink.currentState(s, s"$base/state")
           .select(col("user_id"),
             unix_millis(col("ts")).as("last_ms"),
@@ -8598,7 +8595,7 @@ object Queries {
         val q = graft.streaming.DocStreams.startHll(
           graft.streaming.DocStreams.readStream(s, dir.toString),
           s"$base/store", s"$base/ckpt")
-        try q.processAllAvailable() finally q.stop()
+        EventStreams.drain(q)
         s.read.parquet(s"$base/store/current").orderBy(col("bucket"))
       },
       Some("""WITH h AS (SELECT ('0x'||substr(md5(tok),1,15))::BIGINT AS h FROM (
@@ -9476,7 +9473,7 @@ object Queries {
         val q = graft.streaming.DocStreams.startKll(
           graft.streaming.DocStreams.readStream(s, dir.toString),
           s"$base/store", s"$base/ckpt")
-        try q.processAllAvailable() finally q.stop()
+        EventStreams.drain(q)
         val store = s.read.parquet(s"$base/store/current")
         val skDf = store.agg(
             sum(when(col("w") > 0, col("w")).otherwise(0L)).as("n"),
@@ -10635,17 +10632,11 @@ object Queries {
         // stores), wiped before use so each invocation starts fresh —
         // min-k is idempotent so a stale store would still be correct,
         // but fresh keeps runs independent and /tmp bounded
-        val basePath = java.nio.file.Paths.get(scratchDir("graft_q294_store"))
-        if (java.nio.file.Files.exists(basePath)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(basePath).iterator().asScala
-            .toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-        }
-        val base = basePath.toString
+        val base = freshScratchDir("graft_q294_store")
         val q = graft.streaming.DocStreams.startTheta(
           graft.streaming.DocStreams.readStream(s, dir.toString),
           s"$base/store", s"$base/ckpt", k = 64)
-        try q.processAllAvailable() finally q.stop()
+        EventStreams.drain(q)
         s.read.parquet(s"$base/store/current").orderBy(col("h"))
       },
       Some("""WITH toks AS (SELECT string_split(trim(text), ' ') AS t
@@ -11606,13 +11597,9 @@ object Queries {
         val base = emb.filter(col("vec_id") % 10 =!= 9)
         val stored = operators.AnnIndex.buildOrLoad(base, "vec_id", "embedding",
           k = 15, rounds = 4, initBuckets = 16, indexDir = annIndexDir(d, "base"))
-        def wipe(p: java.nio.file.Path): Unit =
-          if (java.nio.file.Files.exists(p))
-            java.nio.file.Files.walk(p).iterator().asScala
-              .toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
         // CDC feed: two ordered files (mtime-ordered, one per trigger)
         val cdcDir = java.nio.file.Paths.get(scratchDir("graft_q312_cdc"))
-        wipe(cdcDir)
+        EventStreams.deleteTree(cdcDir)
         java.nio.file.Files.createDirectories(cdcDir)
         def writeBatchFile(df: DataFrame, name: String, mtime: Long): Unit = {
           val tmp = cdcDir.resolve(s"${name}_tmp")
@@ -11620,7 +11607,7 @@ object Queries {
           val part = java.nio.file.Files.list(tmp).iterator().asScala
             .find(_.getFileName.toString.endsWith(".parquet")).get
           java.nio.file.Files.move(part, cdcDir.resolve(name))
-          wipe(tmp)
+          EventStreams.deleteTree(tmp)
           cdcDir.resolve(name).toFile.setLastModified(mtime)
         }
         writeBatchFile(base.filter(col("vec_id") % 7 === 3)
@@ -11630,7 +11617,7 @@ object Queries {
           .select(lit("upsert").as("op"), col("vec_id"), col("embedding")),
           "b1.parquet", 2000000L)
         val store = scratchDir("graft_q312_store")
-        wipe(java.nio.file.Paths.get(store))
+        EventStreams.deleteTree(java.nio.file.Paths.get(store))
         graft.streaming.IndexCdc.initStore(s, store, stored,
           base.select(col("vec_id"), col("embedding")))
         val ckpt = java.nio.file.Files.createTempDirectory("graft_q312_ckpt")
@@ -11640,7 +11627,7 @@ object Queries {
         val q = graft.streaming.IndexCdc.start(cdc, store, ckpt.toString,
           "vec_id", "embedding", k = 15, entryIds = Seq(0L, 1L, 2L, 4L),
           beam = 24, searchRounds = 3, repairThreshold = 10L)
-        try q.processAllAvailable() finally { q.stop(); wipe(ckpt) }
+        EventStreams.drain(q, Some(ckpt.toString))
         s.read.parquet(s"$store/current/graph")
           .groupBy(col("q_id").as("id"))
           .agg(count(lit(1)).as("n_nbrs"), sum(col("d2")).as("sum_d2"))
@@ -12193,10 +12180,6 @@ object Queries {
         val cents = Similarity.ivfCentroids(emb, "vec_id", "embedding", 0L until 4L)
         val assigned = Similarity.ivfAssign(base, "vec_id", "embedding", cents)
           .localCheckpoint()
-        def wipe(p: java.nio.file.Path): Unit =
-          if (java.nio.file.Files.exists(p))
-            java.nio.file.Files.walk(p).iterator().asScala
-              .toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
         val cdcDir = java.nio.file.Paths.get(freshScratchDir("graft_q322_cdc"))
         java.nio.file.Files.createDirectories(cdcDir)
         def writeBatchFile(df: DataFrame, name: String, mtime: Long): Unit = {
@@ -12205,7 +12188,7 @@ object Queries {
           val part = java.nio.file.Files.list(tmp).iterator().asScala
             .find(_.getFileName.toString.endsWith(".parquet")).get
           java.nio.file.Files.move(part, cdcDir.resolve(name))
-          wipe(tmp)
+          EventStreams.deleteTree(tmp)
           cdcDir.resolve(name).toFile.setLastModified(mtime)
         }
         // b0: deletes carrying their BEFORE images (the stored vectors);
@@ -12230,7 +12213,7 @@ object Queries {
           ckpt.toString, cents, "vec_id", "embedding", k = 10,
           entriesPerCell = 2, beam = 12, searchRounds = 3,
           repairThreshold = 1L)
-        try q.processAllAvailable() finally { q.stop(); wipe(ckpt) }
+        EventStreams.drain(q, Some(ckpt.toString))
         graft.streaming.IndexCdc.shardedStoreGraph(s, store, 0L until 4L)
           .groupBy(col("cell"), col("q_id").as("id"))
           .agg(count(lit(1)).as("n_nbrs"), sum(col("d2")).as("sum_d2"))
@@ -12953,10 +12936,6 @@ object Queries {
         val cents = Similarity.ivfCentroids(emb, "vec_id", "embedding", 0L until 4L)
         val assigned = Similarity.ivfAssign(base, "vec_id", "embedding", cents)
           .localCheckpoint()
-        def wipe(p: java.nio.file.Path): Unit =
-          if (java.nio.file.Files.exists(p))
-            java.nio.file.Files.walk(p).iterator().asScala
-              .toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
         val cdcDir = java.nio.file.Paths.get(freshScratchDir("graft_q335_cdc"))
         java.nio.file.Files.createDirectories(cdcDir)
         def writeBatchFile(df: DataFrame, name: String, mtime: Long): Unit = {
@@ -12965,7 +12944,7 @@ object Queries {
           val part = java.nio.file.Files.list(tmp).iterator().asScala
             .find(_.getFileName.toString.endsWith(".parquet")).get
           java.nio.file.Files.move(part, cdcDir.resolve(name))
-          wipe(tmp)
+          EventStreams.deleteTree(tmp)
           cdcDir.resolve(name).toFile.setLastModified(mtime)
         }
         writeBatchFile(base.filter(col("vec_id") % 7 === 3)
@@ -12986,7 +12965,7 @@ object Queries {
           ckpt.toString, cents, "vec_id", "embedding", k = 10,
           entriesPerCell = 2, beam = 12, searchRounds = 3,
           repairThreshold = 1L)
-        try q.processAllAvailable() finally { q.stop(); wipe(ckpt) }
+        EventStreams.drain(q, Some(ckpt.toString))
         val (report, _) = graft.streaming.IndexCdc.maintenanceWindow(
           s, store, cents, "vec_id", "embedding", k = 10, graphRounds = 3,
           initBuckets = 16, splitPpm = 250000L, mergePpm = 150000L,
@@ -13632,10 +13611,6 @@ object Queries {
         import scala.jdk.CollectionConverters._
         val emb = t(s, d, "embeddings")
         val base = emb.filter(col("vec_id") % 10 =!= 9)
-        def wipe(p: java.nio.file.Path): Unit =
-          if (java.nio.file.Files.exists(p))
-            java.nio.file.Files.walk(p).iterator().asScala
-              .toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
         val cdcDir = java.nio.file.Paths.get(freshScratchDir("graft_q344_cdc"))
         java.nio.file.Files.createDirectories(cdcDir)
         def writeBatchFile(df: DataFrame, name: String, mtime: Long): Unit = {
@@ -13644,7 +13619,7 @@ object Queries {
           val part = java.nio.file.Files.list(tmp).iterator().asScala
             .find(_.getFileName.toString.endsWith(".parquet")).get
           java.nio.file.Files.move(part, cdcDir.resolve(name))
-          wipe(tmp)
+          EventStreams.deleteTree(tmp)
           cdcDir.resolve(name).toFile.setLastModified(mtime)
         }
         // ONE mixed batch (deletes + upserts): the merge tombstones,
@@ -13675,7 +13650,7 @@ object Queries {
           ckpt.toString, "vec_id", "embedding", cap = 3, k = 15,
           layerK = 5, m = 2, descBeam = 6, descRounds = 2,
           beam = 24, searchRounds = 3, repairThreshold = 1L)
-        try q.processAllAvailable() finally { q.stop(); wipe(ckpt) }
+        EventStreams.drain(q, Some(ckpt.toString))
         val cur = s"$store/current"
         (0 to 3).map { l =>
           s.read.parquet(if (l == 0) s"$cur/graph" else s"$cur/layer_$l")
@@ -14044,10 +14019,6 @@ object Queries {
         val cents = Similarity.ivfCentroids(emb, "vec_id", "embedding", 0L until 4L)
         val assigned = Similarity.ivfAssign(base, "vec_id", "embedding", cents)
           .localCheckpoint()
-        def wipe(p: java.nio.file.Path): Unit =
-          if (java.nio.file.Files.exists(p))
-            java.nio.file.Files.walk(p).iterator().asScala
-              .toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
         val cdcDir = java.nio.file.Paths.get(freshScratchDir("graft_q349_cdc"))
         java.nio.file.Files.createDirectories(cdcDir)
         def writeBatchFile(df: DataFrame, name: String, mtime: Long): Unit = {
@@ -14056,7 +14027,7 @@ object Queries {
           val part = java.nio.file.Files.list(tmp).iterator().asScala
             .find(_.getFileName.toString.endsWith(".parquet")).get
           java.nio.file.Files.move(part, cdcDir.resolve(name))
-          wipe(tmp)
+          EventStreams.deleteTree(tmp)
           cdcDir.resolve(name).toFile.setLastModified(mtime)
         }
         // ONE mixed batch — the q344 trim applied per cell: tombstoning
@@ -14080,7 +14051,7 @@ object Queries {
           store, ckpt.toString, cents, "vec_id", "embedding", cap = 2,
           k = 10, layerK = 5, m = 2, descBeam = 6, descRounds = 2,
           beam = 12, searchRounds = 3, repairThreshold = 1L)
-        try q.processAllAvailable() finally { q.stop(); wipe(ckpt) }
+        EventStreams.drain(q, Some(ckpt.toString))
         (0 to 2).map { l =>
           graft.streaming.ShardedLayeredCdc.shardedLayeredStorePart(s, store,
               0L until 4L, if (l == 0) "graph" else s"layer_$l")
@@ -14359,10 +14330,6 @@ object Queries {
         val cents = Similarity.ivfCentroids(emb, "vec_id", "embedding", 0L until 4L)
         val assigned = Similarity.ivfAssign(base, "vec_id", "embedding", cents)
           .localCheckpoint()
-        def wipe(p: java.nio.file.Path): Unit =
-          if (java.nio.file.Files.exists(p))
-            java.nio.file.Files.walk(p).iterator().asScala
-              .toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
         val cdcDir = java.nio.file.Paths.get(freshScratchDir("graft_q352_cdc"))
         java.nio.file.Files.createDirectories(cdcDir)
         def writeBatchFile(df: DataFrame, name: String, mtime: Long): Unit = {
@@ -14371,7 +14338,7 @@ object Queries {
           val part = java.nio.file.Files.list(tmp).iterator().asScala
             .find(_.getFileName.toString.endsWith(".parquet")).get
           java.nio.file.Files.move(part, cdcDir.resolve(name))
-          wipe(tmp)
+          EventStreams.deleteTree(tmp)
           cdcDir.resolve(name).toFile.setLastModified(mtime)
         }
         // the q349 single mixed batch (deletes + new-id upserts)
@@ -14390,7 +14357,7 @@ object Queries {
           store, ckpt.toString, cents, "vec_id", "embedding", cap = 2,
           k = 10, layerK = 5, m = 2, descBeam = 6, descRounds = 2,
           beam = 12, searchRounds = 3, repairThreshold = 1L)
-        try q.processAllAvailable() finally { q.stop(); wipe(ckpt) }
+        EventStreams.drain(q, Some(ckpt.toString))
         val (report, _) = graft.streaming.ShardedLayeredCdc
           .maintenanceWindowLayered(s, store, cents, "vec_id", "embedding",
             cap = 2, k = 10, graphRounds = 3, layerK = 5, layerRounds = 2,

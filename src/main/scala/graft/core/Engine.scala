@@ -67,6 +67,12 @@ object Engine {
       // StreamExecution clones the session); read only when a session is
       // created, so it is pinned here, and the engine adds no artifacts
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // without libhadoop, Hadoop's local filesystem forks chmod, ls or
+      // readlink for every permission and link call (~250 forks per
+      // streaming run); these answer them in-process (see LocalFs). The
+      // first `file:` filesystem in a JVM is cached for every conf
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
     extraConf.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -79,7 +85,10 @@ object Engine {
     * nothing. The session keeps its builder's confs; in particular,
     * with artifact isolation on (Spark's default), each of its
     * `newSession()`s and streaming queries still compiles its own
-    * generated classes (see [[session]]). */
+    * generated classes (see [[session]]), and unless the builder pinned
+    * the filesystems [[session]] pins, its `file:` paths go through
+    * Hadoop's local filesystem, which forks a process per permission or
+    * link call. */
   def attach(spark: SparkSession): SparkSession = {
     Functions.registerAll(spark)
     spark

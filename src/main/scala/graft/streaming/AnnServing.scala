@@ -49,29 +49,14 @@ object AnnServing {
         val reader = spark.readStream.schema(querySchemaDDL)
         maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
         val stream = reader.parquet(EventStreams.sourceDir(queriesPath))
-        val q = stream.writeStream
+        EventStreams.drain(stream.writeStream
           .option("checkpointLocation", ckpt)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .foreachBatch { (batch: DataFrame, _: Long) =>
             perBatch(batch).write.mode("append").parquet(out)
           }
-          .start()
-        q.awaitTermination()
-      } finally {
-        spark.conf.set(key, prev)
-        try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt)).iterator()
-            .asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        } catch {
-          // cleanup stays best-effort, but a persistently failing delete
-          // must leave a signal (house discipline per graftbridge.Bridge)
-          case e: Exception =>
-            org.slf4j.LoggerFactory.getLogger(getClass)
-              .warn(s"best-effort checkpoint cleanup failed for $ckpt: $e")
-        }
-      }
+          .start(), Some(ckpt))
+      } finally spark.conf.set(key, prev)
       spark.read.parquet(out)
     }
 

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured Streaming over the events stream shape (TESTDATA events
   * table): watermarked tumbling-window aggregation, session windows, and
@@ -380,33 +380,51 @@ object EventStreams {
     spark.conf.set(key, statePartitions.toString)
     val ckpt = newCheckpointDir()
     try {
-      val q = out.writeStream
+      drain(out.writeStream
         .outputMode(OutputMode.Append)
         .format("memory")
         .option("checkpointLocation", ckpt)
         .queryName(queryName)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally {
-      spark.conf.set(key, prev)
-      // one-shot drain: the checkpoint has no resume value — reclaim the
-      // tmpfs instead of leaking a dir per run
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt)).iterator().asScala
-          .toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-      } catch {
-        // cleanup stays best-effort, but a persistently failing
-        // filesystem must leave a signal — silent swallowing would
-        // reintroduce the dir-per-run accumulation this block prevents
-        case e: Exception =>
-          org.slf4j.LoggerFactory.getLogger(getClass)
-            .warn(s"best-effort checkpoint cleanup failed for $ckpt: $e")
-      }
-    }
+        .start(), Some(ckpt))
+    } finally spark.conf.set(key, prev)
     spark.table(queryName)
   }
+
+  /** Finish a one-shot stream: start `query` (evaluated once), run it
+    * until it has processed all available input (or has stopped itself,
+    * like a `Trigger.AvailableNow` query), stop it, close the state
+    * stores it loaded (in local mode; see
+    * [[org.apache.spark.sql.graftbridge.Bridge.releaseStateStores]]) and
+    * delete `checkpoint`, a throwaway checkpoint dir, when given, also
+    * when the query fails to start. The one place the engine waits on a
+    * streaming query. */
+  def drain(query: => StreamingQuery, checkpoint: Option[String] = None): Unit =
+    try {
+      val q = query
+      try q.processAllAvailable()
+      finally {
+        q.stop()
+        org.apache.spark.sql.graftbridge.Bridge.releaseStateStores(q)
+      }
+    } finally checkpoint.foreach { dir =>
+      // the checkpoint has no resume value; cleanup stays best-effort,
+      // but a persistently failing filesystem must leave a signal
+      try deleteTree(java.nio.file.Paths.get(dir))
+      catch {
+        case e @ (_: java.io.IOException | _: java.io.UncheckedIOException) =>
+          org.slf4j.LoggerFactory.getLogger(getClass)
+            .warn(s"best-effort checkpoint cleanup failed for $dir: $e")
+      }
+    }
+
+  /** Delete `p` and everything under it, if it exists. */
+  def deleteTree(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p)) {
+      import scala.jdk.CollectionConverters._
+      val walk = java.nio.file.Files.walk(p)
+      try walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
+      finally walk.close()
+    }
 
   /** Run a streaming query over `dir` into an in-memory table and block
     * until all available input is processed (local smoke harness). */

@@ -89,6 +89,33 @@ object Bridge {
       case _ => ()
     }
 
+  /** Ids of the state-store providers `q` used: one per partition and
+    * store name of each stateful operator in its last executed plan
+    * (none before its first micro-batch). */
+  def stateStoreProviderIds(q: org.apache.spark.sql.streaming.StreamingQuery)
+      : Seq[org.apache.spark.sql.execution.streaming.state.StateStoreProviderId] = {
+    import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreWriter
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.execution.streaming.state.StateStoreProviderId
+    Option(q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution).toSeq
+      .flatMap(_.executedPlan.collect { case w: StateStoreWriter => w })
+      .flatMap { w =>
+        val info = w.getStateInfo
+        for (p <- 0 until info.numPartitions; name <- w.stateStoreNames)
+          yield StateStoreProviderId(info, p, name)
+      }
+  }
+
+  /** Close the state-store providers a stopped query loaded in this JVM.
+    * Spark otherwise keeps them (and their in-memory state) until its
+    * maintenance pass, every 60 s by default, finds them inactive. Acts
+    * in local mode only, where the executor's stores live in this same
+    * JVM; on a cluster this closes nothing and the maintenance pass on
+    * each executor still unloads. */
+  def releaseStateStores(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+    stateStoreProviderIds(q).foreach(
+      org.apache.spark.sql.execution.streaming.state.StateStore.removeFromLoadedProvidersAndClose(_))
+
   /** Install an extra planner strategy on a live session. */
   def addStrategy(spark: SparkSession, strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
     val exp = spark.asInstanceOf[classic.SparkSession].experimental

@@ -57,24 +57,29 @@ object CodegenReuse {
     } finally spark.stop()
   }
 
-  /** Run [[main]] in a child JVM with this JVM's classpath and module
-    * flags; returns (first, second). */
+  /** Run [[main]] in a child JVM; returns (first, second). */
   def inChildJvm(mode: String, sf: String): (Long, Long) = {
+    val log = childJvmOutput("graft.CodegenReuse", mode, sf)
+    val line = """CODEGEN first=(\d+) second=(\d+)""".r
+    line.findFirstMatchIn(log) match {
+      case Some(m) => (m.group(1).toLong, m.group(2).toLong)
+      case None => throw new AssertionError(s"child JVM printed no CODEGEN line:\n${log.takeRight(4000)}")
+    }
+  }
+
+  /** Run `mainClass` in a child JVM with this JVM's classpath and module
+    * flags; returns what it printed (stdout and stderr). */
+  def childJvmOutput(mainClass: String, args: String*): String = {
     val jvmFlags = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
       .filter(a => a.startsWith("--add-opens") || a.startsWith("-Dspark."))
-    val out = Files.createTempFile("codegen_reuse", ".log")
+    val out = Files.createTempFile("child_jvm", ".log")
     try {
       val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++ jvmFlags ++
-        Seq("-cp", sys.props("java.class.path"), "graft.CodegenReuse", mode, sf)
+        Seq("-cp", sys.props("java.class.path"), mainClass) ++ args
       val p = new ProcessBuilder(cmd.asJava).redirectErrorStream(true)
         .redirectOutput(out.toFile).start()
       if (!p.waitFor(600, TimeUnit.SECONDS)) p.destroyForcibly()
-      val log = Files.readString(out)
-      val line = """CODEGEN first=(\d+) second=(\d+)""".r
-      line.findFirstMatchIn(log) match {
-        case Some(m) => (m.group(1).toLong, m.group(2).toLong)
-        case None => throw new AssertionError(s"child JVM printed no CODEGEN line:\n${log.takeRight(4000)}")
-      }
+      Files.readString(out)
     } finally Files.deleteIfExists(out)
   }
 }

@@ -28,7 +28,9 @@ class EngineSpec extends AnyFunSuite {
     "spark.ui.retainedJobs" -> "50",
     "spark.ui.retainedStages" -> "50",
     "spark.sql.ui.retainedExecutions" -> "50",
-    "spark.sql.artifact.isolation.enabled" -> "false")
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.hadoop.fs.file.impl" -> "graft.core.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.core.NioLocalFs")
 
   /** The catalog's sf0.01 tables, as committed for the benchmark. */
   private val sf = "perfbench/data/sf0.01"
@@ -87,6 +89,27 @@ class EngineSpec extends AnyFunSuite {
       .toSet
     assert(callers == Set("graft/core/Engine.scala"),
       s"SparkSession built outside Engine: ${(callers - "graft/core/Engine.scala").mkString(", ")}")
+  }
+
+  test("lint: streaming queries are waited on only in EventStreams.drain") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the project root (no $root)")
+    val await = """processAllAvailable|awaitTermination""".r
+    val helper = "graft/streaming/EventStreams.scala"
+    val sites = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = Files.readString(p)
+        await.findAllMatchIn(src).map(m => (root.relativize(p).toString, m.start, src))
+      }.toSeq
+    val outside = sites.filter(_._1 != helper).map(_._1).distinct
+    assert(outside.isEmpty, s"a stream waited on outside EventStreams.drain: ${outside.mkString(", ")}")
+    // inside the helper file, only within `def drain`
+    val inHelper = sites.filter(_._1 == helper)
+    assert(inHelper.size == 1, s"EventStreams waits on a stream ${inHelper.size} times")
+    val (_, at, src) = inHelper.head
+    assert(src.lastIndexOf("  def ", at) == src.indexOf("  def drain("),
+      "EventStreams waits on a stream outside def drain")
   }
 
   test("Engine.table: a cached footer schema plans the second read without a job") {

@@ -104,7 +104,12 @@ class Round6Spec extends AnyFunSuite {
           .option("checkpointLocation", s"$base/ckpt")
           .option("path", s"$base/out")
           .start()
-        try q.processAllAvailable() finally q.stop()
+        EventStreams.drain(q)
+        // the drain closes the RocksDB providers (and their native state)
+        val ids = org.apache.spark.sql.graftbridge.Bridge.stateStoreProviderIds(q)
+        assert(ids.nonEmpty)
+        assert(!ids.exists(org.apache.spark.sql.execution.streaming.state.StateStore.isLoaded),
+          "a RocksDB state-store provider is still loaded after the drain")
       }
       writeFile(1, Seq(
         ev(1, "2024-01-01 10:00:00", 7, 1.0),

@@ -4,7 +4,10 @@ import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.execution.streaming.state.{StateStore, StateStoreProviderId}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.EventStreams
@@ -14,6 +17,44 @@ class StreamingSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
+
+  /** The streaming queries started on `spark` while `f` runs (a
+    * query-started event is delivered synchronously on the query's
+    * thread, while the query is still registered as active). */
+  private def queriesStarted(f: => Unit): Seq[StreamingQuery] = {
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQuery]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        Option(spark.streams.get(e.id)).foreach(started.add)
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try f finally spark.streams.removeListener(listener)
+    started.asScala.toSeq
+  }
+
+  /** The state-store providers of `f`'s streams still loaded after it. */
+  private def loadedAfter(f: => Unit): (Seq[StateStoreProviderId], Seq[StateStoreProviderId]) = {
+    val ids = queriesStarted(f).flatMap(Bridge.stateStoreProviderIds)
+    (ids, ids.filter(StateStore.isLoaded))
+  }
+
+  test("a drained stream leaves none of its state stores loaded") {
+    spark.catalog.dropTempView("stream_test_release")
+    val (ids, loaded) = loadedAfter(EventStreams.runToMemory(spark, s"$sf/events.parquet",
+      EventStreams.windowedCounts, "stream_test_release").collect())
+    assert(ids.nonEmpty && ids.map(_.storeId.storeName).distinct.size == 1)
+    assert(loaded.isEmpty, s"${loaded.size} of ${ids.size} state-store providers still loaded")
+  }
+
+  test("a drained stream-stream join entry releases all four stores of each partition") {
+    val (ids, loaded) = loadedAfter(
+      Queries.all.toMap.apply("q64_streaming_interval_join").fn(spark, sf).collect())
+    assert(ids.map(_.storeId.storeName).distinct.size == 4)
+    assert(ids.size == 4 * ids.map(_.storeId.partitionId).distinct.size)
+    assert(loaded.isEmpty, s"${loaded.size} of ${ids.size} state-store providers still loaded")
+  }
 
   test("windowed counts: streaming result is a prefix of the batch result") {
     spark.catalog.dropTempView("stream_test_windows")
