@@ -60,6 +60,7 @@ object Main {
       spark.stop()
 
     case "export" :: "--url" :: url :: "--table" :: table :: "--path" :: path :: Nil =>
+      JdbcSink.tuneEmbeddedDerbyForBulkLoad()
       val spark = session()
       val df = M33Pipeline.readM33Csv(spark, path)
       JdbcSink.export(df, url, table)
